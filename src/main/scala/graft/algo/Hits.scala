@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.graph.LinkGraph
+import graft.graph.{CsrGraph, LinkGraph}
 import graft.bsp.{RunContext, StepStat}
 
 /** HITS hubs & authorities with the reference's semantics
@@ -29,32 +29,19 @@ import graft.bsp.{RunContext, StepStat}
   * directions in one broadcast job per superstep. */
 object Hits {
 
-  val InMemMaxIds: Long = 32L * 1000 * 1000
-
   /** Returns (vid, name, hub, auth). */
   def run(g: LinkGraph, iterCount: Int = 20, ctx: RunContext = RunContext.none,
-          tol: Double = 0.01, mode: String = "auto"): DataFrame = {
-    val maxVid = g.nodes.agg(max("vid")).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    if (maxVid < 0)
-      return g.nodes.select(col("vid"), col("name"),
-        lit(0.0).as("hub"), lit(0.0).as("auth")).limit(0)
-    val useCsr = mode == "csr" ||
-      (mode == "auto" && graft.graph.CsrGraph.inMemFits(g, maxVid, InMemMaxIds))
-    if (useCsr) runCsr(g, iterCount, tol, ctx)
-    else graft.bsp.IterativeConf.withStablePartitioning(g.spark) {
-      runDf(g, iterCount, tol, ctx)
-    }
-  }
+          tol: Double = 0.01, mode: String = "auto"): DataFrame =
+    CsrGraph.byMode(g, mode, Seq(lit(0.0).as("hub"), lit(0.0).as("auth")))(
+      runCsr(g, iterCount, tol, ctx),
+      graft.bsp.IterativeConf.withStablePartitioning(g.spark) { runDf(g, iterCount, tol, ctx) })
 
   private def runCsr(g: LinkGraph, iterCount: Int, tol: Double, ctx: RunContext): DataFrame = {
     val spark = g.spark
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val fwd = graft.graph.CsrGraph.fromLinkGraph(g, p)             // in-nbrs per dst
-    val rev = graft.graph.CsrGraph.reversedFromLinkGraph(g, p)     // out-nbrs per src
+    val fwd = CsrGraph.fromLinkGraph(g, p)             // in-nbrs per dst
+    val rev = CsrGraph.reversedFromLinkGraph(g, p)     // out-nbrs per src
     val (hub, auth) = graft.bsp.CsrSuperstep.hits(fwd, rev, iterCount, tol, ctx)
     fwd.unpersist(); rev.unpersist()
     val rows = g.nodes.select($"vid").as[Long].collect().sorted

@@ -2,7 +2,8 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.LinkGraph
+import graft.graph.{CsrGraph, LinkGraph}
+import graft.bsp.Superstep
 import graft.rng.Rand08
 
 /** Community label propagation with the reference's semantics
@@ -91,8 +92,6 @@ object Lpa {
     spark.createDataset(rows).toDF("vid", "name", "label")
   }
 
-  val InMemMaxIds: Long = 32L * 1000 * 1000
-
   /** Scalable deterministic synchronous LPA (red/black by vid parity).
     * Numeric-GID graphs below the in-memory id bound take the CSR fast
     * path (identical labels; one broadcast gather per colour phase);
@@ -105,19 +104,9 @@ object Lpa {
     * one extra no-op sweep, labels identical (CkptSpec). The CSR fast
     * path records metrics only (driver-bounded arrays, re-run on resume). */
   def runSync(g: LinkGraph, maxSweeps: Int = 100, mode: String = "auto",
-              ctx: graft.bsp.RunContext = graft.bsp.RunContext.none): DataFrame = {
-    val maxVid = g.nodes.agg(max("vid")).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    if (maxVid < 0)
-      return g.nodes.select(col("vid"), col("name"), col("name").as("label")).limit(0)
-    val useCsr = mode == "csr" ||
-      (mode == "auto" && g.namesAreNumeric &&
-        graft.graph.CsrGraph.inMemFits(g, maxVid, InMemMaxIds))
-    if (useCsr) runSyncCsr(g, maxSweeps, ctx)
-    else graft.bsp.IterativeConf.withStablePartitioning(g.spark) { runSync0(g, maxSweeps, ctx) }
-  }
+              ctx: graft.bsp.RunContext = graft.bsp.RunContext.none): DataFrame =
+    CsrGraph.byMode(g, mode, Seq(col("name").as("label")), g.namesAreNumeric)(
+      runSyncCsr(g, maxSweeps, ctx), runSyncDf(g, maxSweeps, ctx))
 
   private def runSyncCsr(g: LinkGraph, maxSweeps: Int,
                          ctx: graft.bsp.RunContext): DataFrame = {
@@ -127,7 +116,7 @@ object Lpa {
     val spark = g.spark
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val csr = graft.graph.CsrGraph.undirectedFromLinkGraph(g, p)
+    val csr = CsrGraph.undirectedFromLinkGraph(g, p)
     val nodes = g.nodes.select($"vid", $"name").as[(Long, String)].collect()
     val nameVal = new Array[Long](csr.n)
     nodes.foreach { case (v, nm) => nameVal(v.toInt) = java.lang.Long.parseUnsignedLong(nm) }
@@ -137,54 +126,26 @@ object Lpa {
     spark.createDataset(rows.toSeq).toDF("vid", "name", "label")
   }
 
-  private def runSync0(g: LinkGraph, maxSweeps: Int,
-                       ctx: graft.bsp.RunContext): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pairs = g.undirectedPairs.repartition(p, $"a")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairCount = pairs.count()
-    // label ordering key: numeric GIDs by value, strings lexicographically
-    val nodes = g.nodes
-    var state = ctx.restoreOrInit(
-      nodes.select($"vid", $"name".as("label")).repartition(p, $"vid"))
-
-    // superstep = half-sweep (one colour phase); resume restarts at the
-    // max committed half-sweep. A mid-sweep resume (odd halfStep) cannot
-    // know the first phase's changed count, so that first resumed sweep
-    // never declares done — at worst one extra converged (no-op) sweep,
-    // labels unchanged.
-    var halfStep = ctx.startStep
-    var sweep = halfStep / 2
-    var startColor = halfStep % 2
-    var firstSweepPartial = startColor == 1
-    var done = false
-    while (!done && sweep < maxSweeps) {
-      var changedTotal = if (firstSweepPartial) 1L else 0L
-      for (color <- startColor to 1) {
-        val t0 = System.nanoTime()
-        val newState = lpaPhase(state, pairs, color, g.namesAreNumeric)
-        halfStep += 1
-        val ck = ctx.checkpoint(newState, halfStep)
-        // the changed aggregate materialises the lazy checkpoint — one job
-        // per colour phase (previously an eager localCheckpoint + agg, two)
-        val changed = ck.agg(coalesce(sum(when($"changed", 1L).otherwise(0L)), lit(0L)))
-          .head().getLong(0)
-        changedTotal += changed
-        state = ck.drop("changed")
-        ctx.record(graft.bsp.StepStat("lpa", halfStep, pairCount, pairCount,
-          changed.toDouble, (System.nanoTime() - t0) / 1e6))
+  /** Superstep s is colour phase (s - 1) % 2; a sweep converges when both
+    * of its phases ran in this run and changed nothing. */
+  private def runSyncDf(g: LinkGraph, maxSweeps: Int,
+                        ctx: graft.bsp.RunContext): DataFrame =
+    Superstep.run(g.spark, ctx) { p =>
+      val pairs = g.undirectedPairs.repartition(p, col("a"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // label ordering key: numeric GIDs by value, strings lexicographically
+      val init = g.nodes.select(col("vid"), col("name").as("label"))
+      var phase0Changed: Option[Long] = None // this run's latest colour-0 phase
+      Superstep.Program("lpa", pairs, init, 2L * maxSweeps) { (state, step) =>
+        val color = (step - 1) % 2
+        Superstep.Step(lpaPhase(state, pairs, color, g.namesAreNumeric),
+          Seq(count_if(col("changed"))), { row =>
+            val changed = row.getLong(0)
+            if (color == 0) phase0Changed = Some(changed)
+            (changed.toDouble, color == 1 && changed == 0 && phase0Changed.contains(0L))
+          })
       }
-      startColor = 0
-      firstSweepPartial = false
-      done = changedTotal == 0
-      sweep += 1
-    }
-    ctx.finish() // barrier: async snapshot commits durable before returning
-    pairs.unpersist()
-    state.join(nodes, Seq("vid")).select($"vid", $"name", $"label")
-  }
+    }.join(g.nodes, Seq("vid")).select(col("vid"), col("name"), col("label"))
 
   /** One red/black colour phase as a DataFrame program (PlanSpec audits
     * this fragment: both state joins SHJ, no window, sorts only above

@@ -3,8 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.graph.LinkGraph
-import graft.bsp.{RunContext, StepStat}
+import graft.graph.{CsrGraph, LinkGraph}
+import graft.bsp.{RunContext, Superstep}
 
 /** Unweighted PageRank with the exact semantics of the reference
   * (raphtory/src/algorithms/centrality/pagerank.rs:55-183):
@@ -31,22 +31,13 @@ object PageRank {
       damping: Double = 0.85,
       useL2Norm: Boolean = true,
       /** "auto" picks the CSR fast path when the id space fits in memory
-        * (≤ inMemMaxIds), else the shuffle-based DataFrame supersteps;
+        * (CsrGraph.byMode), else the shuffle-based DataFrame supersteps;
         * "df" / "csr" force a mode. Both modes share exact semantics. */
-      mode: String = "auto",
-      inMemMaxIds: Long = 32L * 1000 * 1000)
+      mode: String = "auto")
 
   /** Returns (vid, name, score). */
-  def run(g: LinkGraph, cfg: Config = Config(), ctx: RunContext = RunContext.none): DataFrame = {
-    val maxVid = g.nodes.agg(max("vid")).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    if (maxVid < 0) return g.nodes.select(col("vid"), col("name"), lit(0.0).as("score")).limit(0)
-    val useCsr = cfg.mode == "csr" ||
-      (cfg.mode == "auto" && graft.graph.CsrGraph.inMemFits(g, maxVid, cfg.inMemMaxIds))
-    if (useCsr) runCsr(g, cfg, ctx) else runDf(g, cfg, ctx)
-  }
+  def run(g: LinkGraph, cfg: Config = Config(), ctx: RunContext = RunContext.none): DataFrame =
+    CsrGraph.byMode(g, cfg.mode, Seq(lit(0.0).as("score")))(runCsr(g, cfg, ctx), runDf(g, cfg, ctx))
 
   /** One Spark job per superstep: broadcast state, gather over dst-range
     * CSR blocks (graft.graph.CsrGraph), stitch segments. */
@@ -54,8 +45,8 @@ object PageRank {
     val spark = g.spark
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val csr = graft.graph.CsrGraph.fromLinkGraph(g, p)
-    val outDeg = graft.graph.CsrGraph.outDegrees(csr)
+    val csr = CsrGraph.fromLinkGraph(g, p)
+    val outDeg = CsrGraph.outDegrees(csr)
     val score = graft.bsp.CsrSuperstep.pageRank(
       csr, outDeg, cfg.iterCount, cfg.tol, cfg.damping, cfg.useL2Norm, ctx)
     csr.unpersist()
@@ -65,75 +56,45 @@ object PageRank {
   }
 
   /** Shuffle-based supersteps — the arbitrary-scale path. */
-  private def runDf(g: LinkGraph, cfg: Config, ctx: RunContext): DataFrame =
-    graft.bsp.IterativeConf.withStablePartitioning(g.spark) { runDf0(g, cfg, ctx) }
-
-  private def runDf0(g: LinkGraph, cfg: Config, ctx: RunContext): DataFrame = {
+  private def runDf(g: LinkGraph, cfg: Config, ctx: RunContext): DataFrame = {
     val spark = g.spark
     import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    Superstep.run(spark, ctx) { p =>
+      val n = g.nodeCount
+      val teleport = (1.0 - cfg.damping) / n
+      val factor = cfg.damping / n
 
-    val n = g.nodeCount
-    if (n == 0) return g.nodes.select($"vid", $"name", lit(0.0).as("score")).limit(0)
+      // static per-run structures: deduped edges and distinct out-degrees,
+      // hash-partitioned once and reused every superstep
+      val edges = g.dedupEdges.repartition(p, $"src").sortWithinPartitions($"src").persist(StorageLevel.MEMORY_AND_DISK)
+      val outDeg = edges.groupBy($"src").agg(count("*").as("out_degree"))
+      val init = g.nodes.select($"vid")
+        .join(outDeg, $"vid" === $"src", "left")
+        .select($"vid", coalesce($"out_degree", lit(0L)).as("out_degree"),
+          lit(1.0 / n).as("score"))
 
-    val teleport = (1.0 - cfg.damping) / n
-    val factor = cfg.damping / n
-
-    // static per-run structures: deduped edges and distinct out-degrees,
-    // hash-partitioned once and reused every superstep
-    val edges = g.dedupEdges.repartition(p, $"src").sortWithinPartitions($"src").persist(StorageLevel.MEMORY_AND_DISK)
-    val edgesScattered = edges.count() // also materialises the cache
-
-    val outDeg = edges.groupBy($"src").agg(count("*").as("out_degree"))
-    val init = g.nodes.select($"vid")
-      .join(outDeg, $"vid" === $"src", "left")
-      .select($"vid", coalesce($"out_degree", lit(0L)).as("out_degree"),
-        lit(1.0 / n).as("score"))
-
-    var state = ctx.restoreOrInit(init.repartition(p, $"vid"))
-    var step = ctx.startStep
-    // sink mass of the current state (Σ prev.score over out_degree == 0)
-    var sinkMass = {
-      val r = state.filter($"out_degree" === 0).agg(sum($"score")).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    var converged = false
-
-    while (!converged && step < cfg.iterCount) {
-      step += 1
-      val t0 = System.nanoTime()
-      val sinkContrib = factor * sinkMass
-
-      // shuffle_hash hints: post-checkpoint state has unknown stats, so
-      // Spark would fall back to SMJ and re-sort the m-row cached edge
-      // table every superstep; SHJ builds the n-row state map instead
-      val contrib = state.hint("shuffle_hash").join(edges, state("vid") === edges("src"))
-        .groupBy($"dst").agg(sum($"score" / $"out_degree").as("gather"))
-
-      val newState = state.join(contrib.hint("shuffle_hash"), state("vid") === contrib("dst"), "left")
-        .select(state("vid"), state("out_degree"),
-          (lit(cfg.damping) * coalesce($"gather", lit(0.0)) + teleport + sinkContrib).as("score"),
-          state("score").as("prev_score"))
-
-      val ck = ctx.checkpoint(newState, step)
-      val deltaExpr =
-        if (cfg.useL2Norm) sum(pow($"prev_score" - $"score", 2.0))
-        else sum(abs($"prev_score" - $"score"))
-      val row = ck.agg(deltaExpr.as("delta"),
-        sum(when($"out_degree" === 0, $"score").otherwise(lit(0.0))).as("sink")).head()
-      val rawDelta = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-      sinkMass = if (row.isNullAt(1)) 0.0 else row.getDouble(1)
-
-      val delta = if (cfg.useL2Norm) math.sqrt(rawDelta) else rawDelta
-      converged = delta <= cfg.tol * n
-
-      state.unpersist()
-      state = ck.drop("prev_score")
-      ctx.record(StepStat("pagerank", step, edgesScattered, edgesScattered, delta,
-        (System.nanoTime() - t0) / 1e6))
-    }
-    ctx.finish() // barrier: all async snapshot commits durable before we return
-    edges.unpersist()
-    state.join(g.nodes, Seq("vid")).select($"vid", $"name", $"score")
+      // sink mass of the current state (Σ prev.score over out_degree == 0);
+      // superstep 1 reads it off the initial or restored state
+      var sinkMass: Option[Double] = None
+      Superstep.Program("pagerank", edges, init, cfg.iterCount) { (state, _) =>
+        val sinkContrib = factor * sinkMass.getOrElse(
+          state.filter($"out_degree" === 0).agg(coalesce(sum($"score"), lit(0.0))).head().getDouble(0))
+        val contrib = state.hint("shuffle_hash").join(edges, state("vid") === edges("src"))
+          .groupBy($"dst").agg(sum($"score" / $"out_degree").as("gather"))
+        val next = state.join(contrib.hint("shuffle_hash"), state("vid") === contrib("dst"), "left")
+          .select(state("vid"), state("out_degree"),
+            (lit(cfg.damping) * coalesce($"gather", lit(0.0)) + teleport + sinkContrib).as("score"),
+            state("score").as("prev_score"))
+        val deltaExpr =
+          if (cfg.useL2Norm) sum(pow($"prev_score" - $"score", 2.0))
+          else sum(abs($"prev_score" - $"score"))
+        Superstep.Step(next,
+          Seq(deltaExpr, sum(when($"out_degree" === 0, $"score").otherwise(lit(0.0)))), { row =>
+            sinkMass = Some(row.getDouble(1))
+            val delta = if (cfg.useL2Norm) math.sqrt(row.getDouble(0)) else row.getDouble(0)
+            (delta, delta <= cfg.tol * n)
+          })
+      }
+    }.join(g.nodes, Seq("vid")).select($"vid", $"name", $"score")
   }
 }

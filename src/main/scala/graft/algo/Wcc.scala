@@ -3,8 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.graph.LinkGraph
-import graft.bsp.{RunContext, StepStat}
+import graft.graph.{CsrGraph, LinkGraph}
+import graft.bsp.{RunContext, Superstep}
 
 /** Weakly connected components — min-label (HashMin) propagation with the
   * exact semantics of the reference
@@ -22,30 +22,19 @@ import graft.bsp.{RunContext, StepStat}
   */
 object Wcc {
 
-  val InMemMaxIds: Long = 32L * 1000 * 1000
-
   /** Returns (vid, name, component_vid, component) where `component` is the
     * representative's GID (name). Auto-dispatches between the CSR fast path
     * (id space fits memory) and the shuffle-based DataFrame supersteps. */
   def run(g: LinkGraph, iterCount: Long = Long.MaxValue, ctx: RunContext = RunContext.none,
-          mode: String = "auto"): DataFrame = {
-    val maxVid = g.nodes.agg(max("vid")).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    if (maxVid < 0)
-      return g.nodes.select(col("vid"), col("name"), col("vid").as("component_vid"),
-        col("name").as("component")).limit(0)
-    val useCsr = mode == "csr" ||
-      (mode == "auto" && graft.graph.CsrGraph.inMemFits(g, maxVid, InMemMaxIds))
-    if (useCsr) runCsr(g, iterCount, ctx) else runDf(g, iterCount, ctx)
-  }
+          mode: String = "auto"): DataFrame =
+    CsrGraph.byMode(g, mode, Seq(col("vid").as("component_vid"), col("name").as("component")))(
+      runCsr(g, iterCount, ctx), runDf(g, iterCount, ctx))
 
   private def runCsr(g: LinkGraph, iterCount: Long, ctx: RunContext): DataFrame = {
     val spark = g.spark
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val csr = graft.graph.CsrGraph.undirectedFromLinkGraph(g, p)
+    val csr = CsrGraph.undirectedFromLinkGraph(g, p)
     val labels = graft.bsp.CsrSuperstep.wcc(csr, iterCount, ctx)
     csr.unpersist()
     val nodes = g.nodes.select($"vid", $"name").as[(Long, String)].collect()
@@ -58,52 +47,38 @@ object Wcc {
   }
 
   private def runDf(g: LinkGraph, iterCount: Long, ctx: RunContext): DataFrame =
-    graft.bsp.IterativeConf.withStablePartitioning(g.spark) { runDf0(g, iterCount, ctx) }
+    hashMin(g.nodes.select(col("vid").as("id")), g.undirectedPairs, "wcc", iterCount, ctx)
+      .join(g.nodes, col("id") === col("vid"))
+      .join(g.nodes.select(col("vid").as("label"), col("name").as("component")), Seq("label"))
+      .select(col("vid"), col("name"), col("label").as("component_vid"), col("component"))
 
-  private def runDf0(g: LinkGraph, iterCount: Long, ctx: RunContext): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-
-    val pairs = g.undirectedPairs.repartition(p, $"a").sortWithinPartitions($"a").persist(StorageLevel.MEMORY_AND_DISK)
-    val pairCount = pairs.count()
-
-    // init: least(vid, min neighbour vid)
-    val nbrMin = pairs.groupBy($"a").agg(min($"b").as("nbr_min"))
-    val init = g.nodes.select($"vid")
-      .join(nbrMin, $"vid" === $"a", "left")
-      .select($"vid", least($"vid", coalesce($"nbr_min", $"vid")).as("label"))
-
-    var state = ctx.restoreOrInit(init.repartition(p, $"vid"))
-    var step = ctx.startStep
-    var done = false
-
-    while (!done && step < iterCount) {
-      step += 1
-      val t0 = System.nanoTime()
-      val msgs = state.hint("shuffle_hash").join(pairs, state("vid") === pairs("a"))
-        .groupBy($"b").agg(min($"label").as("cand"))
-
-      val newState = state.join(msgs.hint("shuffle_hash"), state("vid") === msgs("b"), "left")
-        .select(state("vid"),
-          least($"label", coalesce($"cand", $"label")).as("label"),
-          (coalesce($"cand", $"label") < $"label").as("changed"))
-
-      val ck = ctx.checkpoint(newState, step)
-      val changed = ck.agg(sum(when($"changed", 1L).otherwise(0L))).head().getLong(0)
-      state.unpersist()
-      state = ck.drop("changed")
-      done = changed == 0
-      ctx.record(StepStat("wcc", step, pairCount, pairCount, changed.toDouble,
-        (System.nanoTime() - t0) / 1e6))
+  /** HashMin supersteps over an id table `(id)` and a symmetric neighbour
+    * pair table `(a, b)` — the DataFrame engine of WCC and of
+    * graft.dedup.Dedup.clustersFromPairs. Pairs may repeat; ids absent
+    * from `ids` receive no state. Returns (id, label): the minimum id
+    * reachable from `id` once converged (or after `maxSteps`). */
+  private[graft] def hashMin(ids: DataFrame, pairs: DataFrame, algo: String, maxSteps: Long,
+                             ctx: RunContext): DataFrame =
+    Superstep.run(ids.sparkSession, ctx) { p =>
+      val sym = pairs.repartition(p, col("a")).sortWithinPartitions(col("a"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // init: least(id, min neighbour id)
+      val nbrMin = sym.groupBy(col("a")).agg(min(col("b")).as("nbr_min"))
+      val init = ids.join(nbrMin, col("id") === col("a"), "left")
+        .select(col("id"), least(col("id"), coalesce(col("nbr_min"), col("id"))).as("label"))
+      Superstep.Program(algo, sym, init, maxSteps) { (state, _) =>
+        val msgs = state.hint("shuffle_hash").join(sym, state("id") === sym("a"))
+          .groupBy(col("b")).agg(min(col("label")).as("cand"))
+        val next = state.join(msgs.hint("shuffle_hash"), state("id") === msgs("b"), "left")
+          .select(state("id"),
+            least(col("label"), coalesce(col("cand"), col("label"))).as("label"),
+            (coalesce(col("cand"), col("label")) < col("label")).as("changed"))
+        Superstep.Step(next, Seq(count_if(col("changed"))), { row =>
+          val changed = row.getLong(0)
+          (changed.toDouble, changed == 0)
+        })
+      }
     }
-    ctx.finish() // barrier: async snapshot commits durable before returning
-    pairs.unpersist()
-    state
-      .join(g.nodes, Seq("vid"))
-      .join(g.nodes.select($"vid".as("label"), $"name".as("component")), Seq("label"))
-      .select($"vid", $"name", $"label".as("component_vid"), $"component")
-  }
 
   /** Largest connected component: the induced subgraph of the biggest WCC
     * (algorithms/components/lcc.rs:25-68). */

@@ -16,11 +16,11 @@ case class StepStat(
     wallMs: Double)
 
 /** Superstep bookkeeping for iterative algorithms: lineage cutting,
-  * durable checkpoints, resume, and per-step metrics. Algorithms call
-  * `restoreOrInit` once and `checkpoint`/`record` once per superstep; the
-  * implementation decides whether state lives in executor memory
-  * (LocalRunContext) or in the Icebergish catalog (graft.ckpt.CatalogRunContext)
-  * from which a killed run resumes mid-iteration. */
+  * durable checkpoints, resume, and per-step metrics. The superstep loops
+  * (Superstep, CsrSuperstep) call `restoreOrInit` once and `checkpoint`/
+  * `record` once per superstep; the implementation decides whether state
+  * lives in executor memory (LocalRunContext) or in the Icebergish catalog
+  * (graft.ckpt.CatalogRunContext) from which a killed run resumes mid-iteration. */
 trait RunContext {
   /** Step to resume from (0 = fresh run). */
   def startStep: Int
@@ -40,11 +40,8 @@ trait RunContext {
 
 /** In-memory run context: localCheckpoint (executor-memory snapshot,
   * lineage truncated, hash partitioning preserved) + in-process metrics.
-  * Per-superstep checkpoints are LAZY: every superstep loop follows the
-  * checkpoint with a full-scan aggregate action (delta / convergence
-  * check), which materialises the snapshot in the SAME Spark job — one job
-  * per superstep instead of two, halving the fixed scheduling+driver cost
-  * that dominates small supersteps at high core counts. */
+  * Per-superstep checkpoints are LAZY: the superstep loop's convergence
+  * aggregate materialises each in the same Spark job (graft.bsp.Superstep). */
 class LocalRunContext extends RunContext {
   private val buf = ArrayBuffer.empty[StepStat]
   override def startStep: Int = 0

@@ -39,6 +39,10 @@ final class CatalogRunContext(
     spark: SparkSession,
     every: Int = 1) extends RunContext {
 
+  // runId names catalog tables and is written unescaped into the metrics
+  // JSONL, so it must stay a plain identifier
+  require(runId.matches("[A-Za-z0-9_-]+"), s"runId must match [A-Za-z0-9_-]+, got '$runId'")
+
   private case class MetricRow(algo: String, step: Int, partition: Int, rows: Long,
       edgesScattered: Long, messages: Long, delta: Double, wallMs: Double)
 
@@ -66,7 +70,8 @@ final class CatalogRunContext(
   // flush for superstep N overlap with superstep N+1's compute instead of
   // serialising into the loop. Single-threaded => manifests commit in step
   // order, and a kill leaves max-committed-step as the resume point exactly
-  // as in the synchronous design. Algorithms call finish() after the loop.
+  // as in the synchronous design. Algorithms call finish() after the loop;
+  // it shuts the thread down, and a later finish() (metrics()) is a no-op.
   private val writer = java.util.concurrent.Executors.newSingleThreadExecutor(
     (r: Runnable) => { val t = new Thread(r, s"graft-ckpt-$runId"); t.setDaemon(true); t })
   private var inflight: java.util.concurrent.Future[_] = null
@@ -140,11 +145,15 @@ final class CatalogRunContext(
   override def stats: Seq[StepStat] = stepStats.toSeq
 
   override def finish(): Unit = {
-    pendingCommit.foreach { case (df, st) => submitCommit(df, st) } // defensive
-    pendingCommit = None
-    awaitInflight()
-    // drain queued metric flushes
-    writer.submit(new Runnable { override def run(): Unit = () }).get()
+    if (!writer.isShutdown) try {
+      pendingCommit.foreach { case (df, st) => submitCommit(df, st) } // defensive
+      pendingCommit = None
+      awaitInflight()
+    } finally {
+      // drains the queued metric flushes before the thread exits
+      writer.shutdown()
+      writer.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
     val err = asyncError.get()
     if (err != null) throw err
   }

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.rdd.RDD
 import org.apache.spark.Partitioner
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** One gather-side CSR partition: the adjacency of every destination vertex
@@ -41,18 +42,40 @@ class CsrGraph(
 
 object CsrGraph {
 
-  /** CSR auto-mode fit test shared by PageRank/Wcc/Hits/Lpa: the dense id
-    * space is bounded AND the total node-name payload — which the fast
-    * path collects once to mint the result — stays under `maxNameBytes`
-    * (the id bound alone would admit 32M url-length names ≈ several GB of
-    * driver strings). One cheap agg over the node table; the supersteps
-    * it gates cost orders of magnitude more. */
-  def inMemFits(g: LinkGraph, maxVid: Long, maxIds: Long,
+  /** Id bound of the CSR fast path's dense per-vertex arrays. */
+  val InMemMaxIds: Long = 32L * 1000 * 1000
+
+  /** Largest vid in the graph; -1 when it has no nodes. */
+  def maxVid(g: LinkGraph): Long = {
+    val r = g.nodes.agg(max("vid")).head()
+    if (r.isNullAt(0)) -1L else r.getLong(0)
+  }
+
+  /** CSR auto-mode fit test: the dense id space is bounded AND the total
+    * node-name payload — which the fast path collects once to mint the
+    * result — stays under `maxNameBytes` (the id bound alone would admit
+    * 32M url-length names ≈ several GB of driver strings). One cheap agg
+    * over the node table; the supersteps it gates cost orders of
+    * magnitude more. */
+  def inMemFits(g: LinkGraph, maxVid: Long,
                 maxNameBytes: Long = 2L * 1024 * 1024 * 1024): Boolean =
-    maxVid >= 0 && maxVid < math.min(maxIds, Int.MaxValue.toLong) && {
+    maxVid >= 0 && maxVid < math.min(InMemMaxIds, Int.MaxValue.toLong) && {
       val r = g.nodes.agg(sum(length(col("name")))).head()
       r.isNullAt(0) || r.getLong(0) <= maxNameBytes
     }
+
+  /** Engine dispatch shared by the algorithms with both engines
+    * (PageRank/Wcc/Hits/Lpa): an empty graph returns no rows of (vid, name,
+    * `resultCols`); mode "csr" / "df" forces an engine; "auto" takes the
+    * CSR fast path when `csrOk` and the graph fits [[inMemFits]], else the
+    * DataFrame supersteps. */
+  def byMode(g: LinkGraph, mode: String, resultCols: Seq[Column], csrOk: => Boolean = true)(
+      csr: => DataFrame, df: => DataFrame): DataFrame = {
+    val top = maxVid(g)
+    if (top < 0) g.nodes.select(col("vid") +: col("name") +: resultCols: _*).limit(0)
+    else if (mode == "csr" || (mode == "auto" && csrOk && inMemFits(g, top))) csr
+    else df
+  }
 
   private class RangeByDst(parts: Int, n: Int) extends Partitioner {
     override def numPartitions: Int = parts
@@ -107,13 +130,12 @@ object CsrGraph {
     * graph (no nodes, e.g. a window view over a dead time range) packs to
     * a valid zero-vertex CsrGraph instead of NPE-ing on the null max. */
   private def build(g: LinkGraph, parts: Int,
-                    pairsDf: org.apache.spark.sql.DataFrame): CsrGraph = {
+                    pairsDf: DataFrame): CsrGraph = {
     val spark = g.spark
     import spark.implicits._
-    val maxRow = g.nodes.agg(max("vid")).head()
-    val maxVid = if (maxRow.isNullAt(0)) -1L else maxRow.getLong(0)
-    require(maxVid < Int.MaxValue, s"CSR fast path requires vid < 2^31, got $maxVid")
-    val n = (maxVid + 1).toInt
+    val top = maxVid(g)
+    require(top < Int.MaxValue, s"CSR fast path requires vid < 2^31, got $top")
+    val n = (top + 1).toInt
     val presentVids = g.nodes.select("vid").as[Long].collect()
     val present = new Array[Boolean](n)
     presentVids.foreach(v => present(v.toInt) = true)

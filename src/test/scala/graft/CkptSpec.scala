@@ -87,14 +87,64 @@ class CkptSpec extends AnyFunSuite {
     assert(resumed == full)
   }
 
+  test("dup-clusters kill/resume: clusters identical, pre-crash supersteps not recomputed") {
+    val root = Files.createTempDirectory("graft-ckpt-dup").toString
+    val cat = new Catalog(root)
+    import spark.implicits._
+    // a 9-doc chain (min id at one end: 8 supersteps), a pair, singletons
+    val ids = (1L to 14L).toDF("id")
+    val pairs = ((1L to 8L).map(i => (i + 1, i)) ++ Seq((11L, 10L), (10L, 11L))).toDF("a", "b")
+    def clusters(ctx: graft.bsp.RunContext) =
+      graft.dedup.Dedup.clustersFromPairs(ids, pairs, ctx).collect()
+        .map(r => r.getAs[Long]("id") -> (r.getAs[Long]("cluster"), r.getAs[Boolean]("keep"))).toMap
+    val full = clusters(new CatalogRunContext(cat, "dup-a", spark))
+    val committed = cat.snapshots("state/dup-a")
+    assert(committed.size >= 3, s"need >2 supersteps to crash-drop, got $committed")
+    clusters(new CatalogRunContext(cat, "dup-b", spark))
+    for (s <- 3L to committed.max)
+      Files.delete(Paths.get(root, "state/dup-b/meta", s"manifest-$s.json"))
+    val ctx2 = new CatalogRunContext(cat, "dup-b", spark)
+    val resumed = clusters(ctx2)
+    assert(ctx2.resumedFromStep == 2L)
+    assert(ctx2.stats.forall(_.step > 2), "resume recomputed pre-crash supersteps")
+    assert(ctx2.stats.forall(_.algo == "dup_clusters"))
+    assert(resumed == full)
+    assert(full(9L) == ((1L, false)) && full(1L) == ((1L, true)) && full(14L) == ((14L, true)))
+  }
+
   test("async metric-flush failures surface at the finish() barrier, not silently") {
-    // catalog root nested under a plain FILE: every mkdirs/create fails
+    // catalog root nested under a plain FILE: every mkdirs/create fails.
+    // The failure may surface at record() (if the flush already failed) or
+    // at finish(): both sit inside the intercept
     val f = Files.createTempFile("graft-ckpt-block", "")
     val ctx = new CatalogRunContext(new Catalog(f.toString + "/sub"), "run-e", spark)
-    ctx.record(graft.bsp.StepStat("pagerank", 1, 1L, 1L, 0.0, 1.0))
-    val e = intercept[Throwable] { ctx.finish() }
+    val e = intercept[Throwable] {
+      ctx.record(graft.bsp.StepStat("pagerank", 1, 1L, 1L, 0.0, 1.0))
+      ctx.finish()
+    }
     assert(e.getMessage != null)
     Files.delete(f)
+  }
+
+  test("runId outside [A-Za-z0-9_-]+ is rejected at construction") {
+    val cat = new Catalog(Files.createTempDirectory("graft-ckpt-id").toString)
+    for (bad <- Seq("", "a\"b", "a/b", "run id", "r\nx", "..", "ü"))
+      intercept[IllegalArgumentException] { new CatalogRunContext(cat, bad, spark) }
+    new CatalogRunContext(cat, "Run_1-b", spark).finish()
+  }
+
+  test("finish() stops the writer thread; a second finish() (metrics()) is a no-op") {
+    val root = Files.createTempDirectory("graft-ckpt-fin").toString
+    val g = LinkGraph.fromNumericEdgeList(spark, edges)
+    val ctx = new CatalogRunContext(new Catalog(root), "run-fin", spark)
+    pr(g, ctx) // the algorithm calls finish() once
+    import scala.jdk.CollectionConverters._
+    val writer = Thread.getAllStackTraces.keySet.asScala.filter(_.getName == "graft-ckpt-run-fin")
+    writer.foreach(_.join(10000))
+    assert(writer.forall(!_.isAlive), "writer thread still running after finish()")
+    ctx.finish()
+    val m = ctx.metrics().get.collect() // finish() again, then reads
+    assert(m.count(_.getAs[Int]("partition") == -1) == 12)
   }
 
   test("metrics table carries global and per-partition lineage rows") {

@@ -24,51 +24,66 @@ class PlanSpec extends AnyFunSuite {
     try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  /** Keeps the physical plan of the first state the superstep kernel
+    * checkpoints — the superstep exactly as the algorithm builds it. */
+  class FirstStepPlan extends graft.bsp.LocalRunContext {
+    var plan: org.apache.spark.sql.execution.SparkPlan = _
+    override def checkpoint(state: DataFrame, step: Int): DataFrame = {
+      if (plan == null) plan = state.queryExecution.executedPlan
+      super.checkpoint(state, step)
+    }
+  }
+
+  /** The kernel's superstep invariant: ONE exchange (the message
+    * aggregation), both joins shuffled-hash so the cached static table is
+    * never re-sorted per iteration, no sort, no nested-loop join. */
+  def assertOneExchangeSuperstep(exec: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    // tree collect: the cached static table's BUILD lineage (embedded in the
+    // InMemoryRelation string) ran once, not per superstep
+    val exchanges = exec.collect { case x: ShuffleExchangeExec => x }.length
+    val s = exec.toString
+    assert(exchanges == 1, s"expected exactly 1 shuffle per superstep, got $exchanges in:\n$s")
+    assert(exec.collect { case j: ShuffledHashJoinExec => j }.length == 2,
+      s"superstep joins are not both SHJ:\n$s")
+    assert(exec.collect { case srt: SortExec => srt }.isEmpty, s"unexpected per-superstep sort:\n$s")
+    assert(!s.contains("BroadcastNestedLoopJoin"))
+  }
+
   test("DF PageRank superstep: ONE exchange, no broadcast-nested-loop, cached edge table never re-sorted") {
     // 200k nodes / ~3.2M edges with a 2MB broadcast threshold reproduces
-    // the at-scale join regime (neither side broadcasts); the production
-    // superstep uses shuffle_hash hints because post-checkpoint state has
-    // unknown stats and would otherwise SMJ-re-sort the cached edge table
+    // the at-scale join regime (neither side broadcasts); the superstep
+    // uses shuffle_hash hints because post-checkpoint state has unknown
+    // stats and would otherwise SMJ-re-sort the cached edge table
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (2L * 1024 * 1024).toString)
-    try graft.bsp.IterativeConf.withStablePartitioning(spark) {
-      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    try {
       val n = 200000L
       val edges0 = spark.range(0, n, 1, 4).flatMap { i =>
         graft.io.Corpus.linkTargets(i, 16, 7L).map(j => (i, j))
       }.toDF("src", "dst")
       val g = LinkGraph.fromRawEdges(edges0)
-      val e = g.dedupEdges.repartition(p, $"src").sortWithinPartitions($"src").persist()
-      e.count()
-      val outDeg = e.groupBy($"src").agg(count(lit(1)).as("out_degree"))
-      val state = g.nodes.select($"vid")
-        .join(outDeg, $"vid" === $"src", "left")
-        .select($"vid", coalesce($"out_degree", lit(0L)).as("out_degree"),
-          lit(1.0 / n).as("score"))
-        .repartition(p, $"vid").localCheckpoint(true)
-      val contrib = state.hint("shuffle_hash").join(e, state("vid") === e("src"))
-        .groupBy($"dst").agg(sum($"score" / $"out_degree").as("gather"))
-      val newState = state.join(contrib.hint("shuffle_hash"), state("vid") === contrib("dst"), "left")
-        .select(state("vid"), state("out_degree"),
-          (lit(0.85) * coalesce($"gather", lit(0.0)) + 0.15 / n).as("score"))
-      // tree collect: the cached dedupEdges BUILD lineage (embedded in the
-      // InMemoryRelation string) ran once, not per superstep
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      val exec = newState.queryExecution.executedPlan
-      val exchanges = exec.collect { case x: ShuffleExchangeExec => x }.length
-      val s = exec.toString
-      assert(exchanges == 1, s"expected exactly 1 shuffle per superstep, got $exchanges in:\n$s")
-      // the shuffle_hash hints must hold: both superstep joins SHJ, so the
-      // m-row cached edge table is never re-sorted per iteration
-      import org.apache.spark.sql.execution.SortExec
-      import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-      assert(exec.collect { case j: ShuffledHashJoinExec => j }.length == 2,
-        s"superstep joins are not both SHJ:\n$s")
-      assert(exec.collect { case srt: SortExec => srt }.isEmpty,
-        s"unexpected per-superstep sort:\n$s")
-      assert(!s.contains("BroadcastNestedLoopJoin"))
-      e.unpersist(); g.unpersist()
+      val ctx = new FirstStepPlan
+      graft.algo.PageRank.run(g, graft.algo.PageRank.Config(iterCount = 1, mode = "df"), ctx)
+      assertOneExchangeSuperstep(ctx.plan)
+      g.unpersist()
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+  }
+
+  test("DF HashMin superstep (WCC, dup-clusters): ONE exchange, both joins SHJ, no sort") {
+    withoutAutoBroadcast {
+      val n = 50000L
+      val edges0 = spark.range(0, n, 1, 4).flatMap { i =>
+        graft.io.Corpus.linkTargets(i, 8, 5L).map(j => (i, j))
+      }.toDF("src", "dst")
+      val g = LinkGraph.fromRawEdges(edges0)
+      val ctx = new FirstStepPlan
+      graft.algo.Wcc.run(g, iterCount = 1, ctx = ctx, mode = "df")
+      assertOneExchangeSuperstep(ctx.plan)
+      g.unpersist()
+    }
   }
 
   test("sssp + temporal-reachability supersteps: SHJ against the cached big table, no sort, no window") {
